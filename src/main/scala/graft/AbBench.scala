@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Same-host INTERLEAVED A/B for the round-10 bench-drift watch-list
   * (r10 verdict directive #1): `winnow_pairs`, `corpus_overlap_kmv`,
   * `tf_cosine_pairs`, `vol_signature` moved +53–59% between the driver's
@@ -25,7 +23,6 @@ object AbBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val rounds = sys.env.getOrElse("SPARK_GRAFT_AB_ROUNDS", "8").toInt
     // watch/control sets are env-overridable: each round's verdict names
     // fresh unadjudicated driver-host deltas (r10: the shingle quartet;
@@ -43,75 +40,10 @@ object AbBench {
     val order = watch.zipWithIndex.flatMap { case (w, i) =>
       Seq(w, controls(i % controls.length))
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def materialize(name: String, dir: String): Unit = {
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!SparkEntry.pinnedRddIds.contains(id))
-          rdd.unpersist(blocking = false)
-      }
-    }
-    def timed(name: String): Double = {
-      val t0 = System.nanoTime()
-      materialize(name, sfDir)
-      (System.nanoTime() - t0) / 1e9
-    }
-    // mode `h60`: code-level A/B of the byte-level StaticInvoke h60 vs
-    // the legacy conv(substr(md5_hex)) composition — the suspected cause
-    // itself, toggled per materialization via -Dgraft.h60.legacy (read
-    // at plan-build time, values bit-identical). Contention hits both
-    // arms equally, so the new/legacy ratio isolates the rework.
-    if (sys.env.get("SPARK_GRAFT_AB_MODE").contains("h60")) {
-      val qs = watch
-      qs.foreach(n => materialize(n, warmDir))
-      sys.props("graft.h60.legacy") = "true"
-      qs.foreach(n => materialize(n, warmDir))
-      val nw = scala.collection.mutable.Map.empty[String, Vector[Double]]
-        .withDefaultValue(Vector.empty)
-      val lg = scala.collection.mutable.Map.empty[String, Vector[Double]]
-        .withDefaultValue(Vector.empty)
-      (1 to rounds).foreach { r =>
-        qs.foreach { n =>
-          // position-balanced: odd rounds run new first, even rounds
-          // legacy first — min-of-N per arm then carries no same-query
-          // page-cache/JIT ordering bias
-          val arms =
-            if (r % 2 == 1) Seq("false" -> nw, "true" -> lg)
-            else Seq("true" -> lg, "false" -> nw)
-          arms.foreach { case (flag, acc) =>
-            sys.props("graft.h60.legacy") = flag
-            acc(n) = acc(n) :+ timed(n)
-          }
-        }
-        System.err.println(s"[ab-h60] round $r/$rounds done")
-      }
-      sys.props("graft.h60.legacy") = "false"
-      def r3(v: Double) = math.rint(v * 1000) / 1000
-      val summary = qs.map { n =>
-        "\"" + n + "\":{\"new_min\":" + r3(nw(n).min) +
-          ",\"legacy_min\":" + r3(lg(n).min) +
-          ",\"new_over_legacy\":" + r3(nw(n).min / lg(n).min) +
-          ",\"new_runs\":[" + nw(n).map(r3).mkString(",") +
-          "],\"legacy_runs\":[" + lg(n).map(r3).mkString(",") + "]}"
-      }.mkString("{", ",", "}")
-      val line = s"""{"metric":"ab_h60","rounds":$rounds,"summary":$summary,"sf":"$sfDir"}"""
-      println(line)
-      try java.nio.file.Files.write(java.nio.file.Paths.get("ab_h60.json"),
-        (line + "\n").getBytes("UTF-8"))
-      catch { case e: Throwable => System.err.println(s"[ab] write failed: $e") }
-      spark.stop()
-      return
-    }
-    (watch ++ controls).foreach(n => materialize(n, warmDir))
+    val spark = Harness.session()
+    // a failed query aborts the A/B: a ratio over a missing arm means nothing
+    def timed(name: String): Double = Harness.run(spark, name, sfDir).get
+    (watch ++ controls).foreach(n => Harness.run(spark, n, warmDir).get)
     val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
     (1 to rounds).foreach { r =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.{Failure, Success, Try}
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
@@ -52,48 +52,16 @@ import org.apache.spark.sql.SparkSession
   *    tag at the bench scale factor, measured at first build inside the
   *    timed pass (registry.Memo.buildSecs), so totals can be read with
   *    and without memo amortization.
-  *  - the WindowExec "No Partition Defined" warning logger is silenced:
-  *    the global-window spines are bounded-cardinality by audit
-  *    (SCALE.md), and tens of thousands of these lines drowned the only
-  *    diagnostics of the r15 timed-out run.
+  *  - a failed query is reported, never timed: its pass prints a
+  *    `{"q":…,"error":…}` progress line, the query lands in the
+  *    `failed` map of the detail file, and it is left out of `queries`,
+  *    `runs`, `plan_sha` and `total` (the final line's `nq` drops).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] window-logger silence failed: ${e.getMessage}")
-    }
-
-    def sweep(): Unit =
-      // iterative queries (k-means, connected components) leave
-      // localCheckpoint blocks behind; drop them so queries are hermetic
-      // and no storage pressure accumulates across the run — EXCEPT the
-      // cross-query memos SparkEntry pins (truncated lineage: sweeping
-      // them would strand later readers, see SparkEntry.pinnedRddIds)
-      spark.sparkContext.getPersistentRDDs
-        .foreach { case (id, rdd) =>
-          if (!SparkEntry.pinnedRddIds.contains(id))
-            rdd.unpersist(blocking = false)
-        }
-
-    def materialize(name: String, dir: String): Unit = {
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      sweep()
-    }
+    val spark = Harness.session()
 
     // optional args = subset of query names (targeted iteration)
     val names = {
@@ -114,7 +82,9 @@ object Bench {
 
     // warmup: JIT + codegen cache, tiny data — concurrent (§2.6: the
     // scheduler backfills; failures are caught per query and only cost
-    // that query a slower first timed sample)
+    // that query a slower first timed sample). The sweep waits for the
+    // pool to drain so no thread evicts another's in-flight checkpoint;
+    // a pool still busy at the deadline is abandoned unswept.
     val warmT0 = System.nanoTime()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     names.foreach { n =>
@@ -128,20 +98,16 @@ object Bench {
       })
     }
     pool.shutdown()
-    pool.awaitTermination(60, java.util.concurrent.TimeUnit.MINUTES)
-    sweep()
+    if (pool.awaitTermination(60, java.util.concurrent.TimeUnit.MINUTES))
+      Harness.sweep(spark)
+    else {
+      System.err.println("[bench] warmup did not finish in 60 min; abandoning it unswept")
+      pool.shutdownNow()
+    }
     def r3(v: Double) = math.rint(v * 1000) / 1000
     def r2(v: Double) = math.rint(v * 100) / 100
     note(s"""{"phase":"warmup","sec":${r3((System.nanoTime() - warmT0) / 1e9)},"nq":${names.size}}""")
 
-    def timed(name: String): Double = {
-      val t0 = System.nanoTime()
-      try materialize(name, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
     // Third-pass variant: records the normalized physical-plan
     // fingerprint from the SAME construction the pass times. The
     // fingerprint hashes plan STRUCTURE (plans.PlanFingerprint: the
@@ -159,17 +125,13 @@ object Bench {
     // computed AFTER the timer stops (the df's own QueryExecution is
     // lazy and untouched by the noop write, so this plans the identical
     // plan the dedicated pass used to).
-    def timedSha(name: String): (Double, String) = {
+    def timedSha(name: String): Try[(Double, String)] = {
       graft.plans.PlanTrace.reset()
-      val t0 = System.nanoTime()
-      try {
+      Harness.measure(spark) {
         graft.plans.PlanTrace.recording = true
-        val df =
-          try SparkEntry.queries(name)(spark, sfDir)
-          finally graft.plans.PlanTrace.recording = false
-        df.write.format("noop").mode("overwrite").save()
-        sweep()
-        val dt = (System.nanoTime() - t0) / 1e9
+        try SparkEntry.queries(name)(spark, sfDir)
+        finally graft.plans.PlanTrace.recording = false
+      }.map { case (dt, df) =>
         val sha =
           try {
             val main = graft.plans.PlanFingerprint.structSha(df)
@@ -179,10 +141,6 @@ object Bench {
               (main +: prefixes).mkString("|"))
           } catch { case _: Throwable => "err" }
         (dt, sha)
-      } catch { case e: Throwable =>
-        graft.plans.PlanTrace.recording = false
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        ((System.nanoTime() - t0) / 1e9, "err")
       }
     }
 
@@ -222,26 +180,40 @@ object Bench {
     val ioCalibPre = ioCalibrate()
     val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
     val planShaMap = scala.collection.mutable.Map.empty[String, String]
-    names.foreach { n =>
-      val a = timed(n); val b = timed(n)
-      samples(n) = Vector(a, b)
-      note(s"""{"q":"$n","runs":[${r3(a)},${r3(b)}]}""")
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def fail(n: String, e: Throwable): Unit = {
+      failed(n) = Harness.message(e)
+      note(s"""{"q":"$n","error":${Harness.json(failed(n))}}""")
     }
     names.foreach { n =>
-      val (c, sha) = timedSha(n)
-      samples(n) = samples(n) :+ c
-      planShaMap(n) = sha
-      note(s"""{"q":"$n","run3":${r3(c)},"min":${r3(samples(n).min)},"plan_sha":"$sha"}""")
+      (for (a <- Harness.run(spark, n, sfDir); b <- Harness.run(spark, n, sfDir))
+        yield Vector(a, b)) match {
+        case Success(ab) =>
+          samples(n) = ab
+          note(s"""{"q":"$n","runs":[${r3(ab(0))},${r3(ab(1))}]}""")
+        case Failure(e) => fail(n, e)
+      }
+    }
+    names.filterNot(failed.contains).foreach { n =>
+      timedSha(n) match {
+        case Success((c, sha)) =>
+          samples(n) = samples(n) :+ c
+          planShaMap(n) = sha
+          note(s"""{"q":"$n","run3":${r3(c)},"min":${r3(samples(n).min)},"plan_sha":"$sha"}""")
+        case Failure(e) => fail(n, e)
+      }
     }
     val calib = math.min(calibPre, math.min(calibrate(), calibrate()))
     val ioCalib = math.min(ioCalibPre, math.min(ioCalibrate(), ioCalibrate()))
-    val results = names.map(n => n -> samples(n))
+    val results = names.filterNot(failed.contains).map(n => n -> samples(n))
     val qs = results.map { case (k, v) => "\"" + k + "\":" + r3(v.min) }
       .mkString("{", ",", "}")
     val runs = results.map { case (k, v) =>
       "\"" + k + "\":[" + v.map(r3).mkString(",") + "]"
     }.mkString("{", ",", "}")
-    val shas = names.map { k => "\"" + k + "\":\"" + planShaMap(k) + "\"" }
+    val shas = results.map { case (k, _) => "\"" + k + "\":\"" + planShaMap(k) + "\"" }
+      .mkString("{", ",", "}")
+    val failedJson = failed.map { case (k, msg) => "\"" + k + "\":" + Harness.json(msg) }
       .mkString("{", ",", "}")
     // memo build cost at the bench scale factor (first build ran inside
     // the first timed pass; the min-of-3 drops it from the per-query
@@ -253,7 +225,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = r3(results.map(_._2.min).sum)
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","calib_sec":${r3(calib)},"io_calib_sec":${r3(ioCalib)},"memo_sec":$memoSec,"queries":$qs,"runs":$runs,"plan_sha":$shas,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","calib_sec":${r3(calib)},"io_calib_sec":${r3(ioCalib)},"memo_sec":$memoSec,"queries":$qs,"runs":$runs,"plan_sha":$shas,"failed":$failedJson,"sf":"$sfDir"}"""
     // Full detail (per-query min + all three per-run samples, so a
     // contaminated measurement is self-evident) goes to an EARLIER stdout
     // line and a file: the harness that records the benchmark keeps only

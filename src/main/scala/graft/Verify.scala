@@ -1,64 +1,44 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * `_failed.json`: every query or aux table that failed, with its
+  * message (`{}` when clean). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional trailing args = subset of query names (targeted iteration)
     val only: String => Boolean =
       if (args.length > 2) args.drop(2).toSet else (_ => true)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    def dump(label: String, df: => DataFrame, path: String): Option[(String, String)] = {
+      val failure =
+        try { df.coalesce(1).write.mode("overwrite").parquet(path); None }
+        catch { case e: Throwable => Some(e) }
+      Harness.sweep(spark)
+      failure.map { e =>
+        System.err.println(s"[verify] $label failed: ${e.getMessage}")
+        label -> Harness.message(e)
       }
-      // drop any localCheckpoint blocks an iterative query left behind,
-      // except cross-query memos (truncated lineage — see SparkEntry)
-      spark.sparkContext.getPersistentRDDs
-        .foreach { case (id, rdd) =>
-          if (!SparkEntry.pinnedRddIds.contains(id))
-            rdd.unpersist(blocking = false)
-        }
     }
+    val failed = SparkEntry.queries.filter(kv => only(kv._1)).toSeq.flatMap {
+      case (name, fn) => dump(name, fn(spark, sfDir), s"$outDir/$name")
+    } ++
     // Write-time index state some oracles replay (e.g. the IVF quantizer
     // + cell layout) — ingest-time data a deployment would have on disk.
-    SparkEntry.auxTables.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/_aux/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] aux $name failed: ${e.getMessage}")
-      }
+    SparkEntry.auxTables.toSeq.flatMap {
+      case (name, fn) => dump(s"aux $name", fn(spark, sfDir), s"$outDir/_aux/$name")
     }
     val auxDir = Paths.get(outDir).toAbsolutePath.toString + "/_aux"
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v.replace("__AUX__", auxDir))}" }
+      .map { case (k, v) => s"${Harness.json(k)}: ${Harness.json(v.replace("__AUX__", auxDir))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/_failed.json"), failed
+      .map { case (k, msg) => s"${Harness.json(k)}: ${Harness.json(msg)}" }
+      .mkString("{", ",", "}"))
     spark.stop()
   }
 }

@@ -42,40 +42,15 @@ object PortableHash {
   /** Column form: h60(s) ∈ [0, 2^60); null in → null out like the md5
     * builtin (StaticInvoke propagates null). Any input is rendered
     * through the string cast first — the same bytes the old
-    * `md5(string)` form hashed.
-    *
-    * `-Dgraft.h60.legacy=true` (read at PLAN BUILD time) swaps in the
-    * pre-round-10 `conv(substr(md5_hex,1,15),16,10)` composition — the
-    * VALUES are bit-identical, only the extraction differs — so a
-    * same-JVM interleaved A/B can attribute a bench move to the
-    * byte-level rework vs host variance (graft.AbBench mode `h60`).
-    * Never set in production paths. */
-  // Diagnostic-only toggle (AbBench / H60Probe / DedupSpec flip it at
-  // runtime, so it cannot be cached in a val). Read at plan-BUILD time —
-  // once per query construction, never per row. Warns ONCE when active:
-  // a stray -D flag in a deployment would otherwise silently swap every
-  // query onto the ~4x-slower legacy extraction with no trace.
-  private val legacyWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private def legacyActive: Boolean = {
-    val on = sys.props.get("graft.h60.legacy").contains("true")
-    if (on && legacyWarned.compareAndSet(false, true))
-      System.err.println("[graft] WARNING: graft.h60.legacy=true — h60 " +
-        "plans will use the diagnostic legacy extraction (~4x slower, " +
-        "values bit-identical); intended only for A/B attribution runs")
-    on
-  }
-
-  def h60(c: Column): Column =
-    if (legacyActive) {
-      import org.apache.spark.sql.functions.{conv, md5, substring}
-      conv(substring(md5(c.cast(StringType)), 1, 15), 16, 10).cast(LongType)
-    } else GraftBridge.toColumn(StaticInvoke(
-      PortableHash.getClass,
-      LongType,
-      "md5Prefix60",
-      Seq(Cast(Cast(GraftBridge.toExpression(c), StringType), BinaryType)),
-      Seq(BinaryType),
-      returnNullable = true))
+    * `md5(string)` form hashed; `DedupSpec` holds it equal to that
+    * `conv(substring(md5(s), 1, 15), 16, 10)` reference. */
+  def h60(c: Column): Column = GraftBridge.toColumn(StaticInvoke(
+    PortableHash.getClass,
+    LongType,
+    "md5Prefix60",
+    Seq(Cast(Cast(GraftBridge.toExpression(c), StringType), BinaryType)),
+    Seq(BinaryType),
+    returnNullable = true))
 
   /** Driver-side twin — MUST stay bit-identical to [[h60]]. */
   def h60String(s: String): Long = md5Prefix60(s.getBytes("UTF-8"))

@@ -429,6 +429,11 @@ object Profiling {
           " ELSE NULL END").as("top_decile_share_micro"))
   }
 
+  private def integral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
   /** REFERENTIAL-INTEGRITY audit — per foreign-key edge: child rows
     * (and distinct keys) whose parent is missing, with the integral
     * micro orphan rate. The post-curation read every multi-table
@@ -436,22 +441,24 @@ object Profiling {
     * silently strands child rows, and the damage must be measured
     * BEFORE a training join drops or fabricates them.
     *
-    * Shape at 100 TB: per edge, the child collapses to its per-key
-    * count table (map-side combined, key column only — pushdown prunes
-    * the scan to one column), the parent to its distinct key set; the
-    * anti-join is keys-sized on both sides, never row-level, and each
-    * edge's verdict is a 1-row aggregate. */
-  /** One-scan-per-child form of [[fkOrphans]] (guide §3.1 + §6): edges
-    * sharing a child table resolve through CHAINED BROADCAST LEFT JOINS
-    * against the distinct parent key sets — the child is scanned once
-    * and never shuffled — and ONE aggregate counts every edge's orphan
-    * rows (flag sum over non-null fks) and orphan keys (count-distinct
-    * of flagged fks) at once; per-edge rows unfold map-side. Row values
-    * identical to the per-edge form. */
+    * Shape at 100 TB, one scan per child (guide §3.1 + §6): edges sharing a child table
+    * resolve through CHAINED BROADCAST LEFT JOINS against the distinct
+    * parent key sets — the child is scanned once and never shuffled —
+    * and ONE aggregate counts every edge's orphan rows (flag sum over
+    * non-null fks) and orphan keys (count-distinct of flagged fks) at
+    * once; per-edge rows unfold map-side. Keys are compared as longs, so
+    * every fk and pk must be an integral column: a string key would be
+    * cast and its non-numeric values read as NULL, silently uncounted. */
   def fkOrphansGrouped(
       children: Seq[(DataFrame, Seq[(String, String, DataFrame, String)])])
       : DataFrame =
     children.map { case (child, edges) =>
+      edges.foreach { case (name, fk, parent, pk) =>
+        Seq(child -> fk, parent -> pk).foreach { case (df, k) =>
+          require(integral(df.schema(k).dataType),
+            s"fkOrphansGrouped edge $name: key $k is ${df.schema(k).dataType.simpleString}, not integral")
+        }
+      }
       var cur = child.select(edges.map(e => col(e._2)): _*)
       edges.zipWithIndex.foreach { case ((_, fk, parent, pk), i) =>
         cur = cur.join(
@@ -478,39 +485,17 @@ object Profiling {
             " ELSE NULL END").as("orphan_micro"))
     }.reduce(_.unionByName(_)).orderBy(col("edge"))
 
-  def fkOrphans(
-      edges: Seq[(String, DataFrame, String, DataFrame, String)])
-      : DataFrame =
-    edges.map { case (name, child, fk, parent, pk) =>
-      val counts = child.select(col(fk).as("k"))
-        .filter(col("k").isNotNull)
-        .groupBy(col("k")).agg(count(lit(1)).as("cnt"))
-      val orphans = counts
-        .join(parent.select(col(pk).as("k")).distinct(),
-          Seq("k"), "left_anti")
-        .agg(coalesce(sum(col("cnt")), lit(0L)).cast("long")
-            .as("n_orphan_rows"),
-          count(lit(1)).as("n_orphan_keys"))
-      val total = child.agg(count(lit(1)).as("n_child_rows"))
-      total.crossJoin(broadcast(orphans))
-        .select(lit(name).as("edge"), col("n_child_rows"),
-          col("n_orphan_rows"), col("n_orphan_keys"),
-          expr("CASE WHEN n_child_rows > 0 THEN" +
-            " n_orphan_rows * 1000000 div n_child_rows" +
-            " ELSE NULL END").as("orphan_micro"))
-    }.reduce(_.unionByName(_)).orderBy(col("edge"))
-
   /** KEY-UNIQUENESS audit — for each candidate key (possibly
     * composite): row count, distinct-key count, duplicate-row count
     * and the is-key verdict. The schema-contract read that separates
     * true identifiers from almost-keys before anything dedups,
     * upserts or joins on them. One exact count-distinct per candidate
-    * (two-phase partial agg); candidate-cardinality output. */
-  /** One-scan-per-table form of [[keyUniqueness]] (guide §6): all
-    * candidate keys over one table share a single aggregate (Spark
-    * plans the count-distincts through one Expand), and the per-
-    * candidate rows unfold from that one row map-side — a table audited
-    * for several keys is scanned once. Row values identical. */
+    * (two-phase partial agg); candidate-cardinality output.
+    *
+    * One scan per table (guide §6): all candidate keys over one table
+    * share a single aggregate (Spark plans the count-distincts through
+    * one Expand), and the per-candidate rows unfold from that one row
+    * map-side — a table audited for several keys is scanned once. */
   def keyUniquenessGrouped(
       tables: Seq[(DataFrame, Seq[(String, Seq[String])])]): DataFrame =
     tables.map { case (df, cands) =>
@@ -528,18 +513,6 @@ object Profiling {
           col("c.n_keys").as("n_keys"),
           (col("n_rows") - col("c.n_keys")).as("n_dup_rows"),
           when(col("n_rows") === col("c.n_keys"), 1L).otherwise(0L)
-            .as("is_key"))
-    }.reduce(_.unionByName(_)).orderBy(col("candidate"))
-
-  def keyUniqueness(
-      candidates: Seq[(String, DataFrame, Seq[String])]): DataFrame =
-    candidates.map { case (name, df, cols) =>
-      df.agg(count(lit(1)).as("n_rows"),
-        countDistinct(col(cols.head), cols.tail.map(col): _*)
-          .as("n_keys"))
-        .select(lit(name).as("candidate"), col("n_rows"), col("n_keys"),
-          (col("n_rows") - col("n_keys")).as("n_dup_rows"),
-          when(col("n_rows") === col("n_keys"), 1L).otherwise(0L)
             .as("is_key"))
     }.reduce(_.unionByName(_)).orderBy(col("candidate"))
 

@@ -9,23 +9,22 @@ class DedupSpec extends SparkSpec {
   private def docs(rows: (Long, String)*) =
     rows.toDF("doc_id", "text")
 
-  test("h60 legacy diagnostic gate is value-identical to the byte-level form") {
-    // -Dgraft.h60.legacy exists ONLY for same-JVM perf attribution
-    // (AbBench mode h60); if its values ever drifted from the default
-    // extraction, an A/B run would silently corrupt oracle state
-    import graft.functions.PortableHash.h60
-    import org.apache.spark.sql.functions.col
+  test("h60 equals the conv(substring(md5)) reference and its driver twin") {
+    // the reference is the pre-StaticInvoke composition the DuckDB
+    // oracles mirror, built here from Spark builtins
+    import graft.functions.PortableHash.{h60, h60String}
+    import org.apache.spark.sql.functions.{col, conv, md5, substring}
     val probe = Seq("", "a", "shingle token stream 42", "ü πß",
       (1 to 50).map(i => s"w$i").mkString(" ")).toDF("s")
-    def vals() = probe.select(h60(col("s"))).collect().map(_.getLong(0)).toSeq
-    val neu = vals()
-    sys.props("graft.h60.legacy") = "true"
-    val leg = try vals() finally sys.props.remove("graft.h60.legacy")
-    assert(neu == leg, "legacy h60 extraction drifted from byte-level")
-    // and both match the driver twin
-    val drv = probe.collect().map(r =>
-      graft.functions.PortableHash.h60String(r.getString(0))).toSeq
-    assert(neu == drv)
+    val got = probe.select(col("s"), h60(col("s")),
+        conv(substring(md5(col("s").cast("string")), 1, 15), 16, 10)
+          .cast("long"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    assert(got.length == 5)
+    got.foreach { case (s, byteLevel, reference) =>
+      assert(byteLevel == reference, s"h60 drifted from the md5-prefix reference on '$s'")
+      assert(byteLevel == h60String(s), s"h60 drifted from h60String on '$s'")
+    }
   }
 
   test("connected components: chains collapse to the min id across iterations") {

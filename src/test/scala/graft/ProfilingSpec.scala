@@ -240,4 +240,19 @@ class ProfilingSpec extends SparkSpec {
     assert(empty.getLong(0) == 0 && empty.getLong(2) == 0 &&
       empty.getLong(3) == 0)
   }
+
+  test("fkOrphansGrouped: integral keys count orphans; a string-keyed edge fails at construction") {
+    val parent = Seq(1L, 2L).toDF("pk")
+    // child keys 1, 3 (orphan, twice), NULL (never an orphan)
+    val child = Seq(Some(1), Some(3), Some(3), None).toDF("fk")
+    val r = Profiling.fkOrphansGrouped(Seq(
+      (child, Seq(("child_parent", "fk", parent, "pk"))))).collect().head
+    assert((r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
+      r.getLong(4)) == ("child_parent", 4L, 2L, 1L, 500000L))
+    // "x1" would cast to a NULL long and never count as an orphan
+    val strChild = Seq("1", "x1").toDF("fk")
+    val e = intercept[IllegalArgumentException](Profiling.fkOrphansGrouped(Seq(
+      (strChild, Seq(("str_parent", "fk", parent, "pk"))))))
+    assert(e.getMessage.contains("str_parent") && e.getMessage.contains("string"))
+  }
 }
