@@ -969,15 +969,19 @@ object Dedup {
       pairs.select(col("id_a"), col("id_b")), tag = "cc_pairs")
     // SIZE-GATED DRIVER PATH (r16): a dedup pair set is orders of
     // magnitude smaller than the corpus by construction (pairs are rare
-    // by definition), and below `driverMaxPairs` (default 2²⁰ ≈ 16 MB
-    // of longs — far under any driver budget) the distributed loop's
-    // cost is pure job-scheduling overhead: each batch is a checkpoint
-    // job + a fixpoint probe over a table of a few thousand rows. A
-    // driver union-find over the already-checkpointed pairs computes
-    // the identical min-label components in ONE collect (union by MIN
-    // root + path compression, so every root is its component's
+    // by definition), and below `driverMaxPairs` (default 2²⁰ pairs =
+    // 16 MB of primitive longs collected, plus one sorted id array and
+    // one int array per distinct id — far under any driver budget) the
+    // distributed loop's cost is pure job-scheduling overhead: each
+    // batch is a checkpoint job + a fixpoint probe over a table of a
+    // few thousand rows. A driver union-find over the
+    // already-checkpointed pairs computes the identical min-label
+    // components in ONE collect: every partition ships its pairs as one
+    // interleaved long array (no per-row objects), ids are ranked in a
+    // sorted array, and the union-find runs over those ranks with union
+    // by MIN root + path compression, so every root is its component's
     // minimum id at all times — the same deterministic representative
-    // the distributed min-label fixpoint elects). Above the bound the
+    // the distributed min-label fixpoint elects. Above the bound the
     // pointer-jumping loop below runs unchanged, so the operator stays
     // scale-safe: the gate reads a count of the materialized
     // checkpoint, never the corpus.
@@ -985,25 +989,37 @@ object Dedup {
     if (nPairs <= driverMaxPairs) {
       val spark = pairs.sparkSession
       import spark.implicits._
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
+      val ends = p.select(col("id_a").cast("long"), col("id_b").cast("long"))
+        .queryExecution.toRdd
+        .mapPartitions { rows =>
+          val b = Array.newBuilder[Long]
+          rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+          Iterator.single(b.result())
+        }.collect().flatten
+      val ids = {
+        val s = ends.clone()
+        java.util.Arrays.sort(s)
+        var n = 0
+        for (j <- s.indices) if (n == 0 || s(n - 1) != s(j)) { s(n) = s(j); n += 1 }
+        java.util.Arrays.copyOf(s, n)
+      }
+      val parent = Array.range(0, ids.length)
+      def find(x: Int): Int = {
         var r = x
         while (parent(r) != r) r = parent(r)
         var c = x
         while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
         r
       }
-      p.select(col("id_a").cast("long"), col("id_b").cast("long"))
-        .collect().foreach { row =>
-          val a = row.getLong(0); val b = row.getLong(1)
-          parent.getOrElseUpdate(a, a)
-          parent.getOrElseUpdate(b, b)
-          val ra = find(a); val rb = find(b)
-          if (ra < rb) parent(rb) = ra
-          else if (rb < ra) parent(ra) = rb
-        }
-      return parent.keys.toSeq.sorted
-        .map(id => (id, find(id)))
+      var i = 0
+      while (i < ends.length) {
+        val ra = find(java.util.Arrays.binarySearch(ids, ends(i)))
+        val rb = find(java.util.Arrays.binarySearch(ids, ends(i + 1)))
+        if (ra < rb) parent(rb) = ra
+        else if (rb < ra) parent(ra) = rb
+        i += 2
+      }
+      return ids.indices.map(k => (ids(k), ids(find(k))))
         .toDF("doc_id", "rep_id")
         .orderBy(col("doc_id"))
     }

@@ -434,6 +434,22 @@ object Profiling {
     case _ => false
   }
 
+  /** The join spine both referential-integrity audits
+    * (`Relational.fkOrphans`, [[fkOrphansGrouped]]) aggregate over: the
+    * child's fk columns, scanned once, CHAINED BROADCAST LEFT JOINED
+    * against each edge's distinct parent key set (as long) — edge i's
+    * parent key lands in `__p<i>`, NULL where the child's fk has no
+    * parent. Edges are (name, fk, parent, pk). The child is never
+    * shuffled. */
+  private[operators] def fkJoinSpine(child: DataFrame,
+      edges: Seq[(String, String, DataFrame, String)]): DataFrame =
+    edges.zipWithIndex.foldLeft(child.select(edges.map(e => col(e._2)): _*)) {
+      case (cur, ((_, fk, parent, pk), i)) =>
+        cur.join(
+          broadcast(parent.select(col(pk).cast("long").as(s"__p$i")).distinct()),
+          col(fk).cast("long") === col(s"__p$i"), "left")
+    }
+
   /** REFERENTIAL-INTEGRITY audit — per foreign-key edge: child rows
     * (and distinct keys) whose parent is missing, with the integral
     * micro orphan rate. The post-curation read every multi-table
@@ -459,12 +475,7 @@ object Profiling {
             s"fkOrphansGrouped edge $name: key $k is ${df.schema(k).dataType.simpleString}, not integral")
         }
       }
-      var cur = child.select(edges.map(e => col(e._2)): _*)
-      edges.zipWithIndex.foreach { case ((_, fk, parent, pk), i) =>
-        cur = cur.join(
-          broadcast(parent.select(col(pk).cast("long").as(s"__p$i")).distinct()),
-          col(fk).cast("long") === col(s"__p$i"), "left")
-      }
+      val cur = fkJoinSpine(child, edges)
       def orphanFk(i: Int, fk: String) =
         when(col(fk).isNotNull && col(s"__p$i").isNull, col(fk))
       val aggs = count(lit(1)).as("n_child_rows") +:

@@ -986,12 +986,7 @@ object Relational {
     // anti-join semantics (spec-pinned by EventsAnalyticsSpec).
     def group(child: DataFrame,
         edges: Seq[(String, String, DataFrame, String)]): DataFrame = {
-      var cur = child.select(edges.map(e => col(e._2)): _*)
-      edges.zipWithIndex.foreach { case ((_, fk, parent, pk), i) =>
-        cur = cur.join(
-          broadcast(parent.select(col(pk).cast("long").as(s"__p$i")).distinct()),
-          col(fk).cast("long") === col(s"__p$i"), "left")
-      }
+      val cur = Profiling.fkJoinSpine(child, edges)
       val aggs = count(lit(1)).as("n_child") +:
         edges.zipWithIndex.map { case (_, i) =>
           sum(when(col(s"__p$i").isNull, 1L).otherwise(0L))

@@ -25,8 +25,8 @@ import org.apache.spark.sql.DataFrame
  *
  *  - [[PlanTrace]] — a process-wide recording ring the checkpoint seams
  *    report into. Operators call [[PlanTrace.cp]] instead of raw
- *    `df.localCheckpoint(...)`; the memoized family prefixes in
- *    `registry.Memo` record their build-time sha on every access; and
+ *    `df.localCheckpoint(...)`; every memo in `registry.Memo` is one
+ *    cell that records its build-time sha on every access; and
  *    driver-computed operators (power iteration, MMR, BPE) record the
  *    plan of the relation they collect. When `recording` is OFF (all
  *    production/timed paths) the overhead is one volatile read — the
@@ -71,9 +71,14 @@ object PlanFingerprint {
 }
 
 /** Process-wide recorder for the prefix plans `localCheckpoint` hides.
-  * Single-writer by convention (Bench's fingerprint pass); the queue is
-  * concurrent only so stray multi-threaded construction can't corrupt
-  * it. */
+  * Operator seams record through [[cp]] as they checkpoint. A memo in
+  * `registry.Memo` is checkpointed once, possibly in an untraced pass,
+  * through that file's one pin seam (`checkpointPinned`); its one memo
+  * cell keeps the sha taken BEFORE that checkpoint and records it here
+  * on every access, so a traced pass that only reads the memo still
+  * sees the prefix plan. Single-writer by convention (Bench's
+  * fingerprint pass); the queue is concurrent only so stray
+  * multi-threaded construction can't corrupt it. */
 object PlanTrace {
 
   @volatile var recording: Boolean = false

@@ -10,7 +10,14 @@ import graft.plans.{PlanFingerprint, PlanTrace}
 /** Cross-query memoized prefixes, shared SQL constants and oracle CTE
   * builders — extracted verbatim from SparkEntry (round 11 split).
   * One process = one Bench/Verify run, so memo lifetime is the
-  * process; see the pinning note on [[pinnedRddIds]]. */
+  * process; see the pinning note on [[pinnedRddIds]].
+  *
+  * Every memo is one cell in one map, reached through [[cell]]: built
+  * once under the cell's own lock, its build time noted in
+  * [[buildSecs]], its build-time structural sha recorded into
+  * `PlanTrace` on every access. Every memo checkpoint goes through the
+  * one seam [[checkpointPinned]], which pins exactly the blocks read
+  * off the checkpointed plan. */
 private[graft] object Memo {
   // Filter range for the events-table trends queries: interior of the
   // generated Jan-2024 span at every scale factor, bounds inclusive
@@ -52,18 +59,10 @@ private[graft] object Memo {
     * queries in the same process (dedup_groups, dedup_groups_best and
     * leakage_safe_split all start from one LSH+CC groups prefix) — a
     * localCheckpoint has truncated lineage, so sweeping its blocks would
-    * strand every later reader, not just waste a recompute. */
+    * strand every later reader, not just waste a recompute. Filled only
+    * by [[checkpointPinned]]. */
   val pinnedRddIds: java.util.Set[Integer] =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
-
-  /** Pre-checkpoint structural plan shas of the memoized prefixes,
-    * keyed (tag, ctx, dir) — stored at BUILD time (the memo may be
-    * built during an untraced timed pass) and recorded into
-    * [[PlanTrace]] on EVERY access, so Bench's fingerprint pass sees
-    * the prefix plan the localCheckpoint's LogicalRDD readout hides
-    * (the r11 plan_sha blind spot). */
-  private val shaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, String), String]()
 
   /** Build seconds per (memo tag, data dir) — recorded at FIRST build,
     * which happens inside Bench's first timed pass (memo lifetime is
@@ -85,37 +84,62 @@ private[graft] object Memo {
     v
   }
 
-  /** The memoize-checkpoint-pin pattern every DataFrame family prefix
-    * below shares, plus the build-time sha capture + access-time trace
-    * record. */
-  private def memoizedCp(
-      cache: java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame],
-      tag: String, s: SparkSession, dir: String, eager: Boolean = true)(
-      build: => DataFrame): DataFrame = {
-    val k = (System.identityHashCode(s.sparkContext), dir)
-    val v = cache.computeIfAbsent(k, _ => noteBuild(tag, dir) {
-      val raw = build
-      shaMemo.put((tag, k._1, k._2), PlanFingerprint.structSha(raw))
-      val out = raw.localCheckpoint(eager)
-      // pin by reading the block ids off the checkpointed plan itself
-      // (GraftBridge.checkpointedRddIds) — a global registry diff here
-      // would capture blocks a concurrently-folding standing table
-      // creates in the same window (the r14 StandingTable lesson;
-      // over-pinning is leak-accounting drift only, but the exact
-      // attribution costs nothing)
-      org.apache.spark.sql.GraftBridge.checkpointedRddIds(out)
-        .foreach(id => pinnedRddIds.add(id))
-      out
-    })
-    PlanTrace.record(tag, shaMemo.getOrDefault((tag, k._1, k._2), "unbuilt"))
-    v
+  /** One memo entry: the built value and the structural sha its tag
+    * records on every access (None: the tag records nothing). */
+  private final class Cell { var built: (Any, Option[String]) = null }
+
+  /** Every memo below, keyed (tag, SparkContext identity, data dir,
+    * extra) — `extra` is the groups threshold, `()` elsewhere. */
+  private val cells = new java.util.concurrent.ConcurrentHashMap[
+    (String, Int, String, Any), Cell]()
+
+  /** The one memo path: build once (timed by [[noteBuild]]), then on
+    * EVERY access record the build-time sha into [[PlanTrace]] under
+    * `trace` (default: the tag), so Bench's fingerprint pass sees the
+    * prefix plan a checkpoint's LogicalRDD readout hides even when the
+    * memo was built in an untraced pass (the r11 plan_sha blind spot).
+    * The map only ever creates an empty cell; the build runs under the
+    * cell's own lock. Memos build on memos (shingle_tf → positions,
+    * overlap/lsh_cands → postings, token_tf → tokens, chunk_pairs →
+    * chunk_reps); building inside one shared map's atomic compute
+    * would throw "Recursive update" on the nested build and stall every
+    * key in the bin for the length of a build. A build that throws
+    * leaves the cell empty, so the next access retries it. */
+  private def cell[T](tag: String, s: SparkSession, dir: String,
+      extra: Any = (), trace: String = "")(
+      build: => (T, Option[String])): T = {
+    val c = cells.computeIfAbsent(
+      (tag, System.identityHashCode(s.sparkContext), dir, extra), _ => new Cell)
+    val (v, sha) = c.synchronized {
+      if (c.built == null) c.built = noteBuild(tag, dir)(build)
+      c.built
+    }
+    sha.foreach(h => PlanTrace.record(if (trace.isEmpty) tag else trace, h))
+    v.asInstanceOf[T]
   }
 
-  private[graft] val groupsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String, Double), DataFrame]()
+  /** The one checkpoint seam: eager localCheckpoint, then pin the block
+    * ids read off the checkpointed plan itself
+    * (GraftBridge.checkpointedRddIds). A global registry diff would
+    * capture blocks a concurrently-building memo or folding standing
+    * table creates in the same window (the r14 StandingTable lesson). */
+  private def checkpointPinned(df: DataFrame): DataFrame = {
+    val out = df.localCheckpoint(true)
+    org.apache.spark.sql.GraftBridge.checkpointedRddIds(out)
+      .foreach(id => pinnedRddIds.add(id))
+    out
+  }
 
-  private[graft] val centroidsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String), Array[Array[Double]]]()
+  /** A checkpointed memo: the frame's PRE-checkpoint structural sha (taken
+    * before the checkpoint runs it), then the frame through
+    * [[checkpointPinned]]. */
+  private def memoizedCp(tag: String, s: SparkSession, dir: String,
+      extra: Any = ())(build: => DataFrame): DataFrame =
+    cell(tag, s, dir, extra) {
+      val raw = build
+      val sha = PlanFingerprint.structSha(raw)
+      (checkpointPinned(raw), Some(sha))
+    }
 
   /** Temp parquet state (band index, window census) lives for ONE
     * process by design — delete it on JVM exit so repeated bench/verify
@@ -128,47 +152,33 @@ private[graft] object Memo {
     p.toString
   }
 
-  private[graft] val bandStoreMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String), String]()
-
   /** Banded LSH index persisted ONCE per (SparkContext, corpus dir) via
     * `EmbeddingStore.writeBanded` — the write-time state the
     * cross-corpus semantic check probes. The indexed corpus is the
     * store split the gated query checks against (vec_id ≢ 0 mod 5);
     * queries pay only the batch-side signatures + the probe. */
-  private[graft] def bandStoreFor(s: SparkSession, dir: String): String = {
-    PlanTrace.record("band_store",
-      PlanFingerprint.structSha(Tables.embeddings(s, dir)))
-    bandStoreMemo.computeIfAbsent(
-      (System.identityHashCode(s.sparkContext), dir), _ => noteBuild("band_store", dir) {
-        val path = tempDirFor("graft_emb_index")
-        graft.store.EmbeddingStore.writeBanded(
-          Tables.embeddings(s, dir).filter(pmod(col("vec_id"), lit(5)) =!= 0),
-          path)
-        path
-      })
-  }
-
-  private[graft] val substrStoreMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String), String]()
+  private[graft] def bandStoreFor(s: SparkSession, dir: String): String =
+    cell("band_store", s, dir) {
+      val corpus = Tables.embeddings(s, dir)
+      val path = tempDirFor("graft_emb_index")
+      graft.store.EmbeddingStore.writeBanded(
+        corpus.filter(pmod(col("vec_id"), lit(5)) =!= 0), path)
+      (path, Some(PlanFingerprint.structSha(corpus)))
+    }
 
   /** Window-hash census persisted ONCE per (SparkContext, corpus dir)
     * via `store.SubstrStore.writeWindowCensus` — the write-time state
     * the exact-substring ingest check probes. The indexed corpus is the
     * store split the gated query checks against (doc_id ≢ 0 mod 5);
     * queries pay only the batch-side census + the hash-keyed probe. */
-  private[graft] def substrStoreFor(s: SparkSession, dir: String): String = {
-    PlanTrace.record("substr_store",
-      PlanFingerprint.structSha(Tables.documents(s, dir)))
-    substrStoreMemo.computeIfAbsent(
-      (System.identityHashCode(s.sparkContext), dir), _ => noteBuild("substr_store", dir) {
-        val path = tempDirFor("graft_substr_census")
-        graft.store.SubstrStore.writeWindowCensus(
-          Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(5)) =!= 0),
-          path)
-        path
-      })
-  }
+  private[graft] def substrStoreFor(s: SparkSession, dir: String): String =
+    cell("substr_store", s, dir) {
+      val corpus = Tables.documents(s, dir)
+      val path = tempDirFor("graft_substr_census")
+      graft.store.SubstrStore.writeWindowCensus(
+        corpus.filter(pmod(col("doc_id"), lit(5)) =!= 0), path)
+      (path, Some(PlanFingerprint.structSha(corpus)))
+    }
 
   /** IVF centroids trained ONCE per (SparkContext, corpus dir) — the
     * write-time clustering (`store.EmbeddingStore`); the `ann_ivf_topk`
@@ -177,29 +187,16 @@ private[graft] object Memo {
     * (nCentroids × dims doubles), so no RDD pinning involved. */
   private[graft] def centroidsFor(s: SparkSession,
       dir: String): Array[Array[Double]] =
-    centroidsMemo.computeIfAbsent(
-      (System.identityHashCode(s.sparkContext), dir),
-      _ => noteBuild("ivf_centroids", dir)(
-        Similarity.kmeansCentroids(Tables.embeddings(s, dir))))
-
-  private[graft] val pqMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String), Array[Array[Array[Double]]]]()
+    cell("ivf_centroids", s, dir)(
+      (Similarity.kmeansCentroids(Tables.embeddings(s, dir)), None))
 
   /** PQ codebooks fit ONCE per (SparkContext, corpus dir) — the
     * write-time quantizer state the encode query and the aux dump
     * share, same lifecycle as [[centroidsFor]]. */
   private[graft] def pqFor(s: SparkSession,
       dir: String): Array[Array[Array[Double]]] =
-    pqMemo.computeIfAbsent(
-      (System.identityHashCode(s.sparkContext), dir),
-      _ => noteBuild("pq_codebooks", dir)(
-        Similarity.pqCodebooks(Tables.embeddings(s, dir))))
-
-  private[graft] val postingsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
-
-  private[graft] val overlapMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
+    cell("pq_codebooks", s, dir)(
+      (Similarity.pqCodebooks(Tables.embeddings(s, dir)), None))
 
   /** The (doc_id, shingle) postings table shingled ONCE per
     * (SparkContext, corpus dir) and localCheckpointed — the family
@@ -208,18 +205,15 @@ private[graft] object Memo {
     * (the bm25 exchange-reuse lesson applied ACROSS queries: share the
     * materialization, not just the plan subtree). */
   private[graft] def postingsFor(s: SparkSession, dir: String): DataFrame =
-    memoizedCp(postingsMemo, "postings", s, dir)(
+    memoizedCp("postings", s, dir)(
       Dedup.postings(Tables.documents(s, dir), 3))
 
   /** The candidate-overlap relation (pairs + shared-shingle counts +
     * sizes) computed ONCE over [[postingsFor]] — the jaccard and
     * containment scorers differ only ABOVE this generator. */
   private[graft] def overlapFor(s: SparkSession, dir: String): DataFrame =
-    memoizedCp(overlapMemo, "overlap", s, dir)(
+    memoizedCp("overlap", s, dir)(
       Dedup.overlapWithSizesFrom(postingsFor(s, dir)))
-
-  private[graft] val dupStartsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), Dedup.DupStarts]()
 
   /** The duplicated length-20-window start relation materialized ONCE
     * per (SparkContext, corpus dir) — the family prefix under
@@ -228,24 +222,12 @@ private[graft] object Memo {
     * window length travels inside [[Dedup.DupStarts]], so both
     * consumers are structurally pinned to the length the census was
     * built under. */
-  private[graft] def dupStartsFor(s: SparkSession, dir: String): Dedup.DupStarts = {
-    val k = (System.identityHashCode(s.sparkContext), dir)
-    val v = dupStartsMemo.computeIfAbsent(k, _ => noteBuild("dup_starts", dir) {
-        val d = Dedup.dupStarts(Tables.documents(s, dir), 20)
-        shaMemo.put(("dup_starts", k._1, k._2),
-          PlanFingerprint.structSha(d.rel))
-        val p = d.copy(rel = d.rel.localCheckpoint(true))
-        org.apache.spark.sql.GraftBridge.checkpointedRddIds(p.rel)
-          .foreach(id => pinnedRddIds.add(id))
-        p
-      })
-    PlanTrace.record("dup_starts",
-      shaMemo.getOrDefault(("dup_starts", k._1, k._2), "unbuilt"))
-    v
-  }
-
-  private[graft] val positionsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
+  private[graft] def dupStartsFor(s: SparkSession, dir: String): Dedup.DupStarts =
+    cell("dup_starts", s, dir) {
+      val d = Dedup.dupStarts(Tables.documents(s, dir), 20)
+      val sha = PlanFingerprint.structSha(d.rel)
+      (d.copy(rel = checkpointPinned(d.rel)), Some(sha))
+    }
 
   /** The (doc_id, pos, sh) word-trigram OCCURRENCE census tokenized ONCE
     * per (SparkContext, corpus dir) and localCheckpointed — the
@@ -256,15 +238,12 @@ private[graft] object Memo {
   private[graft] def positionsFor(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextOps.normalize
     import graft.functions.WordShingles.word_ngrams
-    memoizedCp(positionsMemo, "positions", s, dir)(
+    memoizedCp("positions", s, dir)(
       Tables.documents(s, dir)
         .select(col("doc_id"),
           posexplode(word_ngrams(normalize(col("text")), 3))
             .as(Seq("pos", "sh"))))
   }
-
-  private[graft] val docBucketsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
 
   /** The (doc_id, bucket) corpus-order decile relation ranked ONCE per
     * (SparkContext, corpus dir) and localCheckpointed — the family
@@ -274,13 +253,10 @@ private[graft] object Memo {
     * checkpoint passes (the round-7 bench regression: 0.72→1.62 s /
     * 0.66→1.28 s when the curves moved off the global-ntile window). */
   private[graft] def docBucketsFor(s: SparkSession, dir: String): DataFrame =
-    memoizedCp(docBucketsMemo, "doc_buckets", s, dir)(
+    memoizedCp("doc_buckets", s, dir)(
       graft.operators.Ranks.withNtileBucket(
         Tables.documents(s, dir).select(col("doc_id")),
         10, col("doc_id"), Nil, "bucket"))
-
-  private[graft] val bigramTfMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
 
   /** The (doc_id, b, tf) word-bigram COUNT census aggregated ONCE per
     * (SparkContext, corpus dir) and localCheckpointed — the family
@@ -296,16 +272,13 @@ private[graft] object Memo {
   private[graft] def bigramTfFor(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextOps.normalize
     import graft.functions.WordShingles.word_ngrams
-    memoizedCp(bigramTfMemo, "bigram_tf", s, dir)(
+    memoizedCp("bigram_tf", s, dir)(
       Tables.documents(s, dir)
         .select(col("doc_id"),
           explode(word_ngrams(normalize(col("text")), 2)).as("b"))
         .groupBy(col("doc_id"), col("b"))
         .agg(count(lit(1)).as("tf")))
   }
-
-  private[graft] val shingleTfMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
 
   /** The (doc_id, sh, tf) word-trigram COUNT census aggregated ONCE
     * over [[positionsFor]] and localCheckpointed — the family prefix
@@ -315,14 +288,11 @@ private[graft] object Memo {
     * hot-shingle cut, kept postings, norms — all served from this one
     * materialization now). */
   private[graft] def shingleTfFor(s: SparkSession, dir: String): DataFrame =
-    memoizedCp(shingleTfMemo, "shingle_tf", s, dir)(
+    memoizedCp("shingle_tf", s, dir)(
       positionsFor(s, dir)
         .select(col("doc_id"), col("sh"))
         .groupBy(col("doc_id"), col("sh"))
         .agg(count(lit(1)).as("tf")))
-
-  private[graft] val tokensMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
 
   /** The (doc_id, tok) word-token OCCURRENCE table tokenized ONCE per
     * (SparkContext, corpus dir) and localCheckpointed — the unigram
@@ -332,13 +302,10 @@ private[graft] object Memo {
     * from the occurrence table. */
   private[graft] def tokensFor(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextOps.tokens
-    memoizedCp(tokensMemo, "tokens", s, dir)(
+    memoizedCp("tokens", s, dir)(
       Tables.documents(s, dir)
         .select(col("doc_id"), explode(tokens(col("text"))).as("tok")))
   }
-
-  private[graft] val tokenTfMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
 
   /** The (doc_id, tok, tf) word-token COUNT census aggregated ONCE over
     * [[tokensFor]] and localCheckpointed — the unigram sibling of
@@ -351,47 +318,30 @@ private[graft] object Memo {
     * the one consumer that needs raw occurrence multiplicity inside a
     * positional frame (vocab_growth's growth curve). */
   private[graft] def tokenTfFor(s: SparkSession, dir: String): DataFrame =
-    memoizedCp(tokenTfMemo, "token_tf", s, dir)(
+    memoizedCp("token_tf", s, dir)(
       tokensFor(s, dir)
         .groupBy(col("doc_id"), col("tok"))
         .agg(count(lit(1)).as("tf")))
-
-  private[graft] val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String), (Seq[(Long, String, Long)], DataFrame)]()
 
   /** BPE training (merge table + final rewritten corpus) run ONCE per
     * (SparkContext, corpus dir) — `bpe_merges` serves the table,
     * `bpe_encode` the per-doc encodings, off one training run (the
     * dedup-family prefix pattern: share the materialization). The final
-    * corpus stays persisted (bpeTrain's own persist) and its blocks are
-    * pinned against the per-query sweep; its lineage is only `steps`
-    * chained replaces off the scan, so an eviction costs one replay,
-    * not a quadratic loop. */
+    * corpus is checkpointed through [[checkpointPinned]], so the pins are
+    * exactly the returned frame's own blocks, and bpeTrain's persisted
+    * copy is released. Its trace records under `bpe_final` the sha of
+    * that persisted frame (chained replaces off the scan), which
+    * distinguishes the BPE family's driver-local result relations in
+    * the plan fingerprint. */
   private[graft] def bpeFor(s: SparkSession,
       dir: String): (Seq[(Long, String, Long)], DataFrame) =
-    bpeMemo.computeIfAbsent(
-      (System.identityHashCode(s.sparkContext), dir), _ => noteBuild("bpe", dir) {
-        // the one remaining registry-diff pin: bpeTrain persists (not
-        // localCheckpoints) its final corpus, so there is no LogicalRDD
-        // to read an id from; over-pinning from a concurrent fold's
-        // window is benign (pinning never unpersists)
-        val before = s.sparkContext.getPersistentRDDs.keySet
-        val (learned, fin) =
-          TextAnalysis.bpeTrain(Tables.documents(s, dir), 5)
-        fin.count() // materialize before pinning
-        (s.sparkContext.getPersistentRDDs.keySet -- before)
-          .foreach(id => pinnedRddIds.add(id))
-        (learned, fin)
-      }) match { case v @ (_, fin) =>
-        // fin is persisted with lineage intact (chained replaces off the
-        // scan), so its structural sha distinguishes the BPE family's
-        // driver-local result relations in the plan fingerprint
-        PlanTrace.record("bpe_final", PlanFingerprint.structSha(fin))
-        v
-      }
-
-  private[graft] val bm25Memo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
+    cell("bpe", s, dir, trace = "bpe_final") {
+      val (learned, fin) = TextAnalysis.bpeTrain(Tables.documents(s, dir), 5)
+      val sha = PlanFingerprint.structSha(fin)
+      val encoded = checkpointPinned(fin)
+      fin.unpersist(blocking = false)
+      ((learned, encoded), Some(sha))
+    }
 
   /** The corpus BM25 score relation (default query terms) computed ONCE
     * per (SparkContext, corpus dir) and localCheckpointed — the family
@@ -399,11 +349,8 @@ private[graft] object Memo {
     * (its lexical rank list), which otherwise each re-run the
     * tokenize + tf/df/dl chain over the corpus. */
   private[graft] def bm25For(s: SparkSession, dir: String): DataFrame =
-    memoizedCp(bm25Memo, "bm25", s, dir)(
+    memoizedCp("bm25", s, dir)(
       TextAnalysis.bm25Scores(Tables.documents(s, dir)))
-
-  private[graft] val bpCensusMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
 
   /** The seeded boilerplate RAW block census (source, bh, block,
     * n_docs) built ONCE per (SparkContext, corpus dir) and
@@ -414,12 +361,9 @@ private[graft] object Memo {
     * the explode + per-doc-distinct + census aggregate over the
     * decorated corpus. */
   private[graft] def bpCensusFor(s: SparkSession, dir: String): DataFrame =
-    memoizedCp(bpCensusMemo, "bp_census", s, dir)(
+    memoizedCp("bp_census", s, dir)(
       Dedup.boilerplateCensusRaw(
         DedupReg.decorateBoilerplate(Tables.documents(s, dir))))
-
-  private[graft] val liCensusMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
 
   /** The lineitem per-column DISTINCT-VALUE census built ONCE per
     * (SparkContext, corpus dir) and localCheckpointed — the family
@@ -430,11 +374,8 @@ private[graft] object Memo {
     * sf0.1; the census is Σ per-column distincts — a fraction of the
     * explode — and both readouts are census-sized). */
   private[graft] def lineitemCensusFor(s: SparkSession, dir: String): DataFrame =
-    memoizedCp(liCensusMemo, "lineitem_census", s, dir)(
+    memoizedCp("lineitem_census", s, dir)(
       graft.operators.Profiling.valueCensus(Tables.lineitem(s, dir)))
-
-  private[graft] val packLayoutMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
 
   /** The shard-local token LAYOUT relation (doc_id, shard, n_tokens,
     * tokens_before) cumulated ONCE per (SparkContext, corpus dir) and
@@ -446,12 +387,9 @@ private[graft] object Memo {
     * a fraction of the corpus it derives from; defaults pinned to the
     * gated queries' (nShards = 8). */
   private[graft] def packLayoutFor(s: SparkSession, dir: String): DataFrame =
-    memoizedCp(packLayoutMemo, "pack_layout", s, dir)(
+    memoizedCp("pack_layout", s, dir)(
       graft.operators.Sampling.layoutFromMeta(
         graft.operators.Sampling.packMeta(Tables.documents(s, dir), 8)))
-
-  private[graft] val epochAllocMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
 
   /** The epoch ALLOCATION relation (source-cardinality, driver-computed
     * by the largest-remainder allocator) built ONCE per (SparkContext,
@@ -459,21 +397,13 @@ private[graft] object Memo {
     * injects it as its copies quota (same defaults: budgetChars 280000,
     * maxEpochs 2). The result is a LocalRelation (the allocator
     * collects a source-cardinality aggregate), so no checkpoint/pin is
-    * involved — memoizing skips the per-query corpus scan + collect. */
-  private[graft] def epochAllocFor(s: SparkSession, dir: String): DataFrame = {
-    val v = epochAllocMemo.computeIfAbsent(
-      (System.identityHashCode(s.sparkContext), dir),
-      _ => noteBuild("epoch_alloc", dir)(
-        graft.operators.Sampling.epochAllocate(Tables.documents(s, dir))))
-    // driver-local result relation: record its structural sha on every
-    // access (the bpeFor pattern) so the fingerprint tripwire still
-    // sees the allocation readout behind the LocalRelation
-    PlanTrace.record("epoch_alloc", PlanFingerprint.structSha(v))
-    v
-  }
-
-  private[graft] val fracMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
+    * involved — memoizing skips the per-query corpus scan + collect; its
+    * trace records the sha of that driver-local relation. */
+  private[graft] def epochAllocFor(s: SparkSession, dir: String): DataFrame =
+    cell("epoch_alloc", s, dir) {
+      val v = graft.operators.Sampling.epochAllocate(Tables.documents(s, dir))
+      (v, Some(PlanFingerprint.structSha(v)))
+    }
 
   /** The graded-decontamination fraction relation computed ONCE per
     * (SparkContext, corpus dir) — `decontaminate_frac` serves it
@@ -483,11 +413,8 @@ private[graft] object Memo {
     * same broadcast hit-count join), so the family runs one scoring
     * pass instead of two. */
   private[graft] def fracFor(s: SparkSession, dir: String): DataFrame =
-    memoizedCp(fracMemo, "decontam_frac", s, dir)(
+    memoizedCp("decontam_frac", s, dir)(
       TextAnalysis.decontaminationFraction(Tables.documents(s, dir)))
-
-  private[graft] val bloomBitsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String), Array[Long]]()
 
   /** The decontamination Bloom BITMAP (eval-slice n-gram hashes folded
     * into 2²⁰ bits) built ONCE per (SparkContext, corpus dir) — the
@@ -500,33 +427,16 @@ private[graft] object Memo {
     import graft.functions.BloomBits
     import graft.functions.PortableHash.h60
     import graft.functions.TextOps.shingles
-    val k = (System.identityHashCode(s.sparkContext), dir)
-    def evalHashes = Tables.documents(s, dir)
-      .filter(pmod(h60(col("doc_id").cast("string")), lit(1000L)) < 20)
-      .select(explode(shingles(col("text"), 3)).as("sh"))
-      .distinct()
-      .select(h60(col("sh")).as("h"))
-    val v = bloomBitsMemo.computeIfAbsent(k,
-      _ => noteBuild("decontam_bloom_bits", dir) {
-        val rel = evalHashes
-        shaMemo.put(("decontam_bloom_bits", k._1, k._2),
-          PlanFingerprint.structSha(rel))
-        BloomBits.build(rel, 1 << 20, 4)
-      })
-    PlanTrace.record("decontam_bloom_bits",
-      shaMemo.getOrDefault(("decontam_bloom_bits", k._1, k._2), "unbuilt"))
-    v
+    cell("decontam_bloom_bits", s, dir) {
+      val rel = Tables.documents(s, dir)
+        .filter(pmod(h60(col("doc_id").cast("string")), lit(1000L)) < 20)
+        .select(explode(shingles(col("text"), 3)).as("sh"))
+        .distinct()
+        .select(h60(col("sh")).as("h"))
+      val sha = PlanFingerprint.structSha(rel)
+      (BloomBits.build(rel, 1 << 20, 4), Some(sha))
+    }
   }
-
-  /** Near-dup groups (Dedup.dedupGroups) computed ONCE per
-    * (SparkContext, corpus dir, threshold) and localCheckpointed — the
-    * production shape: run the expensive LSH + connected-components
-    * prefix once, then serve every downstream consumer (keep-best,
-    * leakage-safe split, the groups listing itself) from the
-    * materialized result. All checkpoint blocks the build creates are
-    * pinned against the sweep. */
-  private[graft] val lshCandMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
 
   /** The distinct LSH band-collision candidate relation built ONCE per
     * (SparkContext, corpus dir) over [[postingsFor]] — the 64-hash
@@ -534,31 +444,22 @@ private[graft] object Memo {
     * both `minhash_lsh_pairs` (verify stage) and `blocking_quality`
     * (candidate counting) consume the same relation. */
   private[graft] def lshCandidatesFor(s: SparkSession, dir: String): DataFrame =
-    memoizedCp(lshCandMemo, "lsh_cands", s, dir)(
+    memoizedCp("lsh_cands", s, dir)(
       Dedup.lshCandidatesFrom(postingsFor(s, dir)))
-
-  private[graft] val chunkRepsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
-  private[graft] val chunkPairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
 
   /** Representative chunks (exact-collapsed) built ONCE per corpus —
     * the shared prefix of the fuzzy chunk-dedup pair gate and its
     * per-doc audit. */
   private[graft] def chunkRepsFor(s: SparkSession, dir: String): DataFrame =
-    memoizedCp(chunkRepsMemo, "chunk_reps", s, dir)(
+    memoizedCp("chunk_reps", s, dir)(
       Dedup.chunkReps(Tables.documents(s, dir)))
 
   /** Verified cid-level fuzzy chunk pairs built ONCE per corpus — the
     * 64-hash signature build over representatives is the expensive
     * half; both consumers read this one materialization. */
   private[graft] def chunkPairsFor(s: SparkSession, dir: String): DataFrame =
-    memoizedCp(chunkPairsMemo, "chunk_pairs", s, dir)(
+    memoizedCp("chunk_pairs", s, dir)(
       Dedup.chunkMinhashPairsRaw(chunkRepsFor(s, dir)))
-
-  private[graft] val chunkIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (Int, String), (DataFrame, DataFrame, DataFrame)]()
 
   /** The three `chunk_dedup_against` corpus relations (band rows, cut
     * postings, hot-shingle census) built ONCE per (SparkContext, corpus
@@ -569,9 +470,8 @@ private[graft] object Memo {
     * per-run index rebuild (the bandStoreFor / substrStoreFor
     * precedent). */
   private[graft] def chunkIndexFor(s: SparkSession,
-      dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val k = (System.identityHashCode(s.sparkContext), dir)
-    val v = chunkIndexMemo.computeIfAbsent(k, _ => noteBuild("chunk_index", dir) {
+      dir: String): (DataFrame, DataFrame, DataFrame) =
+    cell("chunk_index", s, dir) {
       val shas = Seq.newBuilder[String]
       val triple = Dedup.chunkIndexRelations(
         Tables.documents(s, dir)
@@ -580,40 +480,22 @@ private[graft] object Memo {
         maxDf = 1000,
         cp = df => {
           shas += PlanFingerprint.structSha(df)
-          val out = df.localCheckpoint(true)
-          // per-checkpoint exact attribution INSIDE the cp seam (the
-          // memoizedCp rule): ids read off each checkpointed plan, no
-          // global-registry diff window for a concurrent fold to leak
-          // its blocks into
-          org.apache.spark.sql.GraftBridge.checkpointedRddIds(out)
-            .foreach(id => pinnedRddIds.add(id))
-          out
+          checkpointPinned(df)
         })
-      shaMemo.put(("chunk_index", k._1, k._2),
-        PlanFingerprint.sha6(shas.result().mkString(",")))
-      triple
-    })
-    PlanTrace.record("chunk_index",
-      shaMemo.getOrDefault(("chunk_index", k._1, k._2), "unbuilt"))
-    v
-  }
+      (triple, Some(PlanFingerprint.sha6(shas.result().mkString(","))))
+    }
 
+  /** Near-dup groups (Dedup.dedupGroups) computed ONCE per
+    * (SparkContext, corpus dir, threshold) and localCheckpointed — the
+    * production shape: run the expensive LSH + connected-components
+    * prefix once, then serve every downstream consumer (keep-best,
+    * leakage-safe split, the groups listing itself) from the
+    * materialized result. All checkpoint blocks the build creates are
+    * pinned against the sweep. */
   private[graft] def groupsFor(s: SparkSession, dir: String,
-      threshold: Double): DataFrame = {
-    val k = (System.identityHashCode(s.sparkContext), dir, threshold)
-    val v = groupsMemo.computeIfAbsent(k, _ => noteBuild("groups", dir) {
-        val raw = Dedup.dedupGroups(Tables.documents(s, dir), threshold)
-        shaMemo.put(("groups", k._1, k._2 + "@" + k._3),
-          PlanFingerprint.structSha(raw))
-        val g = raw.localCheckpoint(true)
-        org.apache.spark.sql.GraftBridge.checkpointedRddIds(g)
-          .foreach(id => pinnedRddIds.add(id))
-        g
-      })
-    PlanTrace.record("groups",
-      shaMemo.getOrDefault(("groups", k._1, k._2 + "@" + k._3), "unbuilt"))
-    v
-  }
+      threshold: Double): DataFrame =
+    memoizedCp("groups", s, dir, threshold)(
+      Dedup.dedupGroups(Tables.documents(s, dir), threshold))
 
   /** CTE list (no WITH keyword) reproducing Dedup.minhashLshPairs up to a
     * `pairs(id_a, id_b, jaccard6)` relation — shared by the pairs oracle

@@ -113,19 +113,13 @@ abstract class StandingTable(protected val spark: SparkSession) {
 
   // checkpoint the new state, release the superseded blocks — the
   // eager checkpoint no longer references them; state stays one table.
-  // Block ids are read off the checkpointed plan itself
-  // (GraftBridge.checkpointedRddIds), never by diffing the global
-  // persistent-RDD registry: the diff window could capture a
-  // CONCURRENTLY-folding table's fresh blocks (locks are per-instance)
-  // and a later release here would unpersist the other table's live
-  // state.
+  // Block ids are read off the checkpointed plan itself, never by
+  // diffing the global registry (graft.plans.Blocks).
   private def setCheckpointed(next: DataFrame): Unit = {
-    val sc = spark.sparkContext
     currentDf = next.localCheckpoint(true)
     val newBlocks =
       org.apache.spark.sql.GraftBridge.checkpointedRddIds(currentDf)
-    liveBlocks.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+    graft.plans.Blocks.release(spark, liveBlocks)
     liveBlocks = newBlocks
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
+import graft.plans.Blocks
 
 /**
  * Streaming boilerplate-line census — the continuous form of
@@ -82,28 +83,19 @@ object StreamBoilerplate {
   def startAdmitting(documents: DataFrame, table: CensusTable,
       sink: (DataFrame, Long) => Unit, minDocs: Long = 3L,
       checkpoint: Option[String] = None): StreamingQuery = {
-    val spark = documents.sparkSession
     val writer = documents.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val b = batch.persist()
         try {
-          val stripped = Dedup.boilerplateStrip(b, table.flagged(minDocs),
-            table.blockTokens).localCheckpoint(true)
-          // block ids read off the checkpointed plan itself — exact
-          // attribution, no global registry diff a concurrent fold
-          // could race (GraftBridge.checkpointedRddIds)
-          val stripBlocks =
-            org.apache.spark.sql.GraftBridge.checkpointedRddIds(stripped)
-          try {
+          Blocks.withCheckpoint(Dedup.boilerplateStrip(b,
+              table.flagged(minDocs), table.blockTokens)) { stripped =>
             sink(stripped, batchId)
             // position-carrying fold: a crash-replayed batch re-strips
             // and re-sinks (at-least-once out) but never re-folds — the
             // census stays exactly-once under any crash/resume point
             table.fold(b, batchId)
-          } finally stripBlocks.foreach(id =>
-            spark.sparkContext.getPersistentRDDs.get(id)
-              .foreach(_.unpersist(blocking = false)))
+          }
         } finally b.unpersist()
       }
     checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))

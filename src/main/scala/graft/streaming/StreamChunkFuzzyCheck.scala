@@ -5,6 +5,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
 import graft.store.ChunkStore
+import graft.plans.Blocks
 
 /**
  * Streaming fuzzy-chunk ingest check — the continuous form of
@@ -68,13 +69,8 @@ object StreamChunkFuzzyCheck {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val b = batch.persist()
         try {
-          val flagged = probe(spark, b, indexPath, window, stride,
-            threshold, bands, rowsPerBand).localCheckpoint(true)
-          // exact block attribution off the checkpointed plan — no
-          // global registry diff a concurrent fold could race
-          val blocks =
-            org.apache.spark.sql.GraftBridge.checkpointedRddIds(flagged)
-          try {
+          Blocks.withCheckpoint(probe(spark, b, indexPath, window,
+              stride, threshold, bands, rowsPerBand)) { flagged =>
             sink(flagged, batchId)
             ChunkStore.appendBandIndex(b, indexPath, window, stride,
               bands, rowsPerBand)
@@ -87,9 +83,7 @@ object StreamChunkFuzzyCheck {
               ChunkStore.compactBandIndex(spark, indexPath, out)
               ChunkStore.swapCompacted(indexPath, out)
             }
-          } finally blocks.foreach(id =>
-            spark.sparkContext.getPersistentRDDs.get(id)
-              .foreach(_.unpersist(blocking = false)))
+          }
         } finally b.unpersist()
       }
     checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))

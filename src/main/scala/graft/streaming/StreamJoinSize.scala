@@ -61,7 +61,6 @@ object StreamJoinSize {
     def fold(batchKeys: DataFrame, batchId: Long): Unit = synchronized {
       if (batchId >= 0 && batchId <= lastFoldedBatch) return
       import org.apache.spark.sql.GraftBridge.checkpointedRddIds
-      val sc = spark.sparkContext
       val bk = batchKeys
         .groupBy(col("k")).agg(count(lit(1)).as("cnt"))
         .localCheckpoint(true)
@@ -74,11 +73,9 @@ object StreamJoinSize {
         .localCheckpoint(true)
       // block ids read off each checkpointed plan — exact attribution,
       // no global registry diff a concurrent fold could race
-      // (GraftBridge.checkpointedRddIds)
       val newBlocks =
         checkpointedRddIds(keyTable) ++ checkpointedRddIds(cellTable)
-      (checkpointedRddIds(bk) ++ liveBlocks).foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+      graft.plans.Blocks.release(spark, checkpointedRddIds(bk) ++ liveBlocks)
       liveBlocks = newBlocks
       if (batchId >= 0) lastFoldedBatch = batchId
     }
@@ -94,7 +91,6 @@ object StreamJoinSize {
       * fold-after-load ≡ uninterrupted (the StandingTable contract). */
     def load(path: String): Unit = synchronized {
       import org.apache.spark.sql.GraftBridge.checkpointedRddIds
-      val sc = spark.sparkContext
       keyTable = graft.store.Snapshot
         .loadPart(spark, path, "keys", emptyKeys.schema)
         .select(col("k"), col("cnt")).localCheckpoint(true)
@@ -104,8 +100,7 @@ object StreamJoinSize {
       lastFoldedBatch = graft.store.Snapshot.lastBatchOf(path)
       val newBlocks =
         checkpointedRddIds(keyTable) ++ checkpointedRddIds(cellTable)
-      liveBlocks.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+      graft.plans.Blocks.release(spark, liveBlocks)
       liveBlocks = newBlocks
     }
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Multimodal
 import graft.store.MediaStore
+import graft.plans.Blocks
 
 /**
  * Streaming media ingest check — the multimodal twin of
@@ -67,13 +68,7 @@ object StreamMediaCheck {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val b = batch.persist()
         try {
-          val flagged = probe(spark, b, indexPath, maxDist)
-            .localCheckpoint(true)
-          // exact block attribution off the checkpointed plan — no
-          // global registry diff a concurrent fold could race
-          val blocks =
-            org.apache.spark.sql.GraftBridge.checkpointedRddIds(flagged)
-          try {
+          Blocks.withCheckpoint(probe(spark, b, indexPath, maxDist)) { flagged =>
             sink(flagged, batchId)
             MediaStore.appendPhashIndex(b, indexPath)
             if (compactEvery > 0 &&
@@ -85,9 +80,7 @@ object StreamMediaCheck {
               MediaStore.compactPhashIndex(spark, indexPath, out)
               MediaStore.swapCompacted(indexPath, out)
             }
-          } finally blocks.foreach(id =>
-            spark.sparkContext.getPersistentRDDs.get(id)
-              .foreach(_.unpersist(blocking = false)))
+          }
         } finally b.unpersist()
       }
     checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))

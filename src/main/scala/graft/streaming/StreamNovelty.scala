@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
+import graft.plans.Blocks
 
 /**
  * Streaming ingest-novelty monitor — the continuous form of
@@ -53,22 +54,16 @@ object StreamNovelty {
       sink: (DataFrame, Long) => Unit,
       n: Int = 3, k: Int = 128,
       checkpoint: Option[String] = None): StreamingQuery = {
-    val spark = documents.sparkSession
     val writer = documents.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val b = batch.persist()
         try {
-          val verdict = probe(b, table, n, k).localCheckpoint(true)
-          val blocks =
-            org.apache.spark.sql.GraftBridge.checkpointedRddIds(verdict)
-          try {
+          Blocks.withCheckpoint(probe(b, table, n, k)) { verdict =>
             sink(verdict, batchId)
             table.fold(
               b.select(lit("corpus").as("source"), col("text")), batchId)
-          } finally blocks.foreach(id =>
-            spark.sparkContext.getPersistentRDDs.get(id)
-              .foreach(_.unpersist(blocking = false)))
+          }
         } finally b.unpersist()
       }
     checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
+import graft.plans.Blocks
 
 /**
  * Streaming semantic ingest check — the continuous form of
@@ -84,13 +85,8 @@ object StreamSemanticCheck {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val b = batch.persist()
         try {
-          val flagged = probe(spark, b, indexPath,
-            threshold, bands, bitsPerBand).localCheckpoint(true)
-          // exact block attribution off the checkpointed plan — no
-          // global registry diff a concurrent fold could race
-          val blocks =
-            org.apache.spark.sql.GraftBridge.checkpointedRddIds(flagged)
-          try {
+          Blocks.withCheckpoint(probe(spark, b, indexPath,
+              threshold, bands, bitsPerBand)) { flagged =>
             sink(flagged, batchId)
             graft.store.EmbeddingStore.appendBanded(b, indexPath,
               bands, bitsPerBand)
@@ -104,9 +100,7 @@ object StreamSemanticCheck {
                 spark, indexPath, out)
               graft.store.EmbeddingStore.swapBanded(indexPath, out)
             }
-          } finally blocks.foreach(id =>
-            spark.sparkContext.getPersistentRDDs.get(id)
-              .foreach(_.unpersist(blocking = false)))
+          }
         } finally b.unpersist()
       }
     checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))

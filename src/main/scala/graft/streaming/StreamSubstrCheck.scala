@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
+import graft.plans.Blocks
 
 /**
  * Streaming exact-substring ingest check — the continuous form of
@@ -96,13 +97,8 @@ object StreamSubstrCheck {
           // re-derive. Blocks are released with the batch — a sink
           // still holding the frame after that fails loudly (missing
           // checkpoint data), never silently wrong.
-          val spans = probe(spark, b, censusPath, minLen)
-            .localCheckpoint(true)
-          // exact block attribution off the checkpointed plan — no
-          // global registry diff a concurrent fold could race
-          val spanBlocks =
-            org.apache.spark.sql.GraftBridge.checkpointedRddIds(spans)
-          try {
+          Blocks.withCheckpoint(
+              probe(spark, b, censusPath, minLen)) { spans =>
             sink(spans, batchId)
             graft.store.SubstrStore.appendWindowCensus(b, censusPath, minLen)
             if (compactEvery > 0 &&
@@ -116,9 +112,7 @@ object StreamSubstrCheck {
                 spark, censusPath, out)
               graft.store.SubstrStore.swapCompacted(censusPath, out)
             }
-          } finally spanBlocks.foreach(id =>
-            spark.sparkContext.getPersistentRDDs.get(id)
-              .foreach(_.unpersist(blocking = false)))
+          }
         } finally b.unpersist()
       }
     checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
@@ -166,11 +160,8 @@ object StreamSubstrCheck {
           // cleaned result materialized with truncated lineage BEFORE
           // the census append (the startAdmitting contract: a deferred
           // sink must never re-derive against the appended census)
-          val cleaned = probeApply(spark, b, censusPath, minLen)
-            .localCheckpoint(true)
-          val blocks =
-            org.apache.spark.sql.GraftBridge.checkpointedRddIds(cleaned)
-          try {
+          Blocks.withCheckpoint(
+              probeApply(spark, b, censusPath, minLen)) { cleaned =>
             sink(cleaned, batchId)
             graft.store.SubstrStore.appendWindowCensus(
               cleaned.select(col("doc_id"), col("clean_text").as("text")),
@@ -183,9 +174,7 @@ object StreamSubstrCheck {
                 spark, censusPath, out)
               graft.store.SubstrStore.swapCompacted(censusPath, out)
             }
-          } finally blocks.foreach(id =>
-            spark.sparkContext.getPersistentRDDs.get(id)
-              .foreach(_.unpersist(blocking = false)))
+          }
         } finally b.unpersist()
       }
     checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))

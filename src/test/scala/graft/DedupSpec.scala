@@ -29,13 +29,17 @@ class DedupSpec extends SparkSpec {
 
   test("connected components: chains collapse to the min id across iterations") {
     // component {1,2,3,4} is a CHAIN (diameter 3 — forces >1 propagation
-    // round), {10,11} a pair; labels converge to the minimum member
+    // round), {10,11} a pair; labels converge to the minimum member.
+    // driverMaxPairs = 0 skips the driver union-find, so the same
+    // fixture also runs the distributed pointer-jumping loop
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
       .toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L))
+    Seq(1L << 20, 0L).foreach { maxPairs =>
+      val got = Dedup.connectedComponents(pairs, driverMaxPairs = maxPairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+        10L -> 10L, 11L -> 10L), s"driverMaxPairs = $maxPairs")
+    }
   }
 
   test("best-representative selection: winner is a member with the group's max quality") {
