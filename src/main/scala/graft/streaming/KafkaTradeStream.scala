@@ -4,16 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ingest.TradeIngest
-import graft.store.TradeStore
-
 /**
  * Kafka deployment of the ingest/import planes (SURVEY.md §2.1 S2/S3).
  * Format names resolve at run time, so this compiles without the
  * spark-sql-kafka connector jar (absent in the zero-egress sandbox);
  * in a deployment with the connector on the classpath these run as-is.
- * The transform chain is byte-identical to the MemoryStream-tested path —
- * only the endpoints differ.
+ * The import plane is `TradeStream.start` itself — the MemoryStream-tested
+ * and benchmarked parse → `foreachBatch` → store chain — so only the
+ * endpoints differ.
  *
  * Client configs mirror the reference:
  *  - consumer group starts at latest (`importer/cmd/main.go:24`,
@@ -52,16 +50,7 @@ object KafkaTradeStream {
       .option("startingOffsets", "latest")
       .load()
       .select(col("value").cast("string").as("json"))
-    TradeIngest.parseTrades(raw, "json")
-      .writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (idempotent) TradeStore.writeBatch(batch, storePath, batchId)
-        else TradeStore.write(batch, storePath)
-      }
-      .start()
+    TradeStream.start(raw, "json", storePath, checkpointPath, trigger, idempotent)
   }
 
   /** S2 + consumer plane: validated wire messages → Kafka (JSON values,

@@ -76,10 +76,27 @@ class StreamingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-idem-stream").toString
     val src = MemoryStream[String]
     src.addData(trade("12-AUG-24 11:23:45"), trade("12-AUG-24 11:31:00", 1.2))
-    val q = TradeStream.start(src.toDF(), "value", s"$dir/store", s"$dir/ckpt",
+    // three more chunks (one input partition each) before the trigger, each
+    // spanning two dates and in falling time order
+    (0 until 3).foreach { c =>
+      src.addData((0 until 4).flatMap { i =>
+        val ts = f"${50 - 10 * c - i}%02d"
+        Seq(trade(s"12-AUG-24 09:$ts:00"), trade(s"13-AUG-24 09:$ts:00"))
+      }: _*)
+    }
+    val store = s"$dir/store"
+    val q = TradeStream.start(src.toDF(), "value", store, s"$dir/ckpt",
       trigger = Trigger.AvailableNow(), idempotent = true)
     q.awaitTermination()
-    assert(TradeStore.readBatched(spark, s"$dir/store").count() == 2)
+    assert(TradeStore.readBatched(spark, store).count() == 26)
+    // one time-sorted file per batch_id=N/trade_date=D directory
+    val byDir = parquetFiles(store).groupBy(_.getParent)
+    assert(byDir.keySet.map(d => s"${d.getParent.getFileName}/${d.getFileName}") ==
+      Set("batch_id=0/trade_date=2024-08-12", "batch_id=0/trade_date=2024-08-13"))
+    byDir.foreach { case (d, files) =>
+      assert(files.size == 1, s"$d holds ${files.size} files")
+      assert(timeSorted(files.head), s"${files.head} is not time-sorted")
+    }
   }
 
   test("streaming dedup: duplicates within the watermark horizon collapse across batches") {
@@ -146,17 +163,19 @@ class StreamingSpec extends SparkSpec {
 
   test("store layout: date-partitioned, time-sorted within partitions") {
     val dir = Files.createTempDirectory("graft-store").toString
-    val rows = Seq(
+    // 2000 trades over two dates, in shuffled time order, from 8 partitions
+    val t0 = Timestamp.valueOf("2024-08-12 08:00:00").getTime
+    val times = new scala.util.Random(7).shuffle((0 until 2000).toVector)
+    val rows = spark.sparkContext.parallelize(times.map(i =>
       model.Trade("u", "EUR", "USD", 1L, 2L, 2.0, "US",
-        Timestamp.valueOf("2024-08-12 11:00:00")),
-      model.Trade("u", "EUR", "USD", 1L, 2L, 2.0, "US",
-        Timestamp.valueOf("2024-08-13 09:00:00")),
-      model.Trade("u", "EUR", "USD", 1L, 2L, 2.0, "US",
-        Timestamp.valueOf("2024-08-12 08:00:00"))).toDF()
+        new Timestamp(t0 + i * 60000L))), 8).toDF()
     TradeStore.write(rows, dir)
     val dates = new java.io.File(dir).list().filter(_.startsWith("trade_date="))
     assert(dates.toSet == Set("trade_date=2024-08-12", "trade_date=2024-08-13"))
-    assert(TradeStore.read(spark, dir).count() == 3)
+    assert(TradeStore.read(spark, dir).count() == 2000)
+    val files = parquetFiles(dir)
+    assert(files.nonEmpty)
+    files.foreach(f => assert(timeSorted(f), s"$f is not time-sorted"))
   }
 
   test("rate limiter: reference Redis-window semantics incl. retry-after (ratelimit.go:38-62)") {

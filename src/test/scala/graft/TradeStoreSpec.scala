@@ -85,19 +85,14 @@ class TradeStoreSpec extends SparkSpec {
   }
 
   test("compaction folds per-batch directories into the batch layout, rows intact") {
-    import org.apache.spark.sql.functions.col
-    def parquetFiles(root: String): Int = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-      java.nio.file.Files.walk(java.nio.file.Paths.get(root)).forEach(p =>
-        if (p.toString.endsWith(".parquet")) out += p)
-      out.size
-    }
     val src = java.nio.file.Files.createTempDirectory("graft-batched").toString
-    // 6 micro-batches across 2 dates — 6 batch dirs, ≥6 files
+    // 6 micro-batches across 2 dates — 6 batch dirs, ≥6 files; each batch
+    // later in time than the next and in falling time order, 4 partitions
     (0 until 6).foreach { b =>
-      TradeStore.writeBatch(Seq(
-        t(s"2024-08-10 0$b:00:00", b + 1.0),
-        t(s"2024-08-11 0$b:30:00", b + 10.0)).toDF(), src, b.toLong)
+      TradeStore.writeBatch((0 until 50).reverse.flatMap { m =>
+        val hm = f"${5 - b}%02d:$m%02d"
+        Seq(t(s"2024-08-10 $hm:00", b + 1.0), t(s"2024-08-11 $hm:30", b + 10.0))
+      }.toDF().repartition(4), src, b.toLong)
     }
     val dst = java.nio.file.Files.createTempDirectory("graft-compact").toString
     TradeStore.compact(spark, src, dst)
@@ -107,18 +102,17 @@ class TradeStoreSpec extends SparkSpec {
     val after = TradeStore.read(spark, dst).collect().map(_.toSeq).toSet
     assert(after == before)
     // file economics: per-batch sprawl collapses to ~one run per date
-    assert(parquetFiles(src) >= 6)
-    assert(parquetFiles(dst) < parquetFiles(src))
+    assert(parquetFiles(src).size >= 6)
+    assert(parquetFiles(dst).size < parquetFiles(src).size)
     // the compacted store still serves pruned, pushed range reads
     val df = TradeStore.readRange(spark, dst,
       Timestamp.valueOf("2024-08-11 00:00:00"),
       Timestamp.valueOf("2024-08-11 23:59:59"))
-    assert(df.count() == 6)
+    assert(df.count() == 300)
     val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(plan.contains("GreaterThanOrEqual(time_placed,"))
     // time clustering survives: rows within each file are time-sorted
-    val perFile = TradeStore.read(spark, dst)
-      .select(col("time_placed")).inputFiles
-    assert(perFile.nonEmpty)
+    assert(parquetFiles(dst).nonEmpty)
+    parquetFiles(dst).foreach(f => assert(timeSorted(f), s"$f is not time-sorted"))
   }
 }
